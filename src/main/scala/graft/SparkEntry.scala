@@ -3,7 +3,7 @@ package graft
 import graft.core._
 import graft.corpus.Corpus
 import graft.engine.{CrawlEngine, EngineConfig}
-import graft.functions.{UrlExpressions, UrlUdfs}
+import graft.functions.UrlExpressions
 import graft.ops.TextOps
 import graft.state.SnapshotStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}

@@ -59,17 +59,6 @@ final class BloomSeenFilter(val bf: BloomFilter) extends SeenFilter {
   }
 }
 
-/** Safety valve while a bucket's filter awaits rebuild: answers
-  * "maybe" to everything — a correct (maximal) superset, so the exact
-  * anti-join does all the work for that bucket until the rebuild lands.
-  */
-final class DegradedSeenFilter extends SeenFilter {
-  def put(key: String): Boolean = true
-  def mightContain(key: String): Boolean = true
-  def remove(key: String): Boolean = false
-  def serialize(): Array[Byte] = Array('D'.toByte)
-}
-
 object SeenFilter {
   val KindCuckoo = "cuckoo"
   val KindBloom = "bloom"
@@ -85,7 +74,6 @@ object SeenFilter {
       CuckooFilter.deserialize(java.util.Arrays.copyOfRange(bytes, 1, bytes.length)))
     case 'B' => new BloomSeenFilter(BloomFilter.readFrom(
       new java.io.ByteArrayInputStream(bytes, 1, bytes.length - 1)))
-    case 'D' => new DegradedSeenFilter
     case k => sys.error(s"unknown seen-filter format byte $k")
   }
 

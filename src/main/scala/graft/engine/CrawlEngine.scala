@@ -9,25 +9,30 @@ import scala.jdk.CollectionConverters._
 import scala.util.hashing.MurmurHash3
 
 final case class EngineConfig(
+    /** Frontier and host-state partition count: O(cores) locally, thousands
+      * on a cluster; results are bucket-count independent.
+      */
     numBuckets: Int = 32,
+    /** Failed fetches retried, with backoff, before a URL goes dead. */
     maxRetries: Int = CrawlDefaults.MaxRetries,
+    /** Redirect hops followed before too_many_redirects (redirect.go:16-23). */
     maxRedirects: Int = CrawlDefaults.MaxRedirects,
+    /** Link-discovery depth limit: pages at this depth submit no links. */
     maxDepth: Int = 3,
+    /** Agent the robots rules are matched against. */
     userAgent: String = "graft-bot",
+    /** Batch cap for `runDrain` (bounded drains in benches and tests). */
     maxBatches: Int = 100000,
     /** Seen-set prefilter (north rule): submissions the filter proves
       * unseen skip the dedup join entirely; possible hits go through the
-      * exact anti-join, which stays authoritative. Results are
-      * bit-identical with or without (CrawlParitySpec asserts it).
+      * exact anti-join, which stays authoritative. Per-bucket cuckoo
+      * filters, rebuilt as a bloom when a bucket's cuckoo fills.
+      * Results are bit-identical with or without (CrawlParitySpec
+      * asserts it).
       */
     useBloomPrefilter: Boolean = false,
-    /** "cuckoo" (default; supports deletion, engine rebuilds a bucket as
-      * bloom when its cuckoo table fills — the north star's "bloom
-      * fallback") or "bloom".
-      */
-    seenFilterKind: String = SeenFilter.KindCuckoo,
+    /** Seen-filter sizing: expected URLs across all buckets. */
     bloomExpectedItems: Long = 1L << 20,
-    bloomFpp: Double = 0.03,
     /** B2: apply UrlFilter.shouldSkipUrl as a pre-submit gate in the
       * drain, mirroring the reference's pre-fetch abort
       * (crawler/collector.go:443-450, url_filter.go:38-65). Off by
@@ -35,10 +40,6 @@ final case class EngineConfig(
       * parity test runs both models with it on.
       */
     usePreSubmitUrlFilter: Boolean = false,
-    /** Persist per-batch discovered-link rows (link_handler.go:384-406)
-      * feeding the R3/R5 domain views.
-      */
-    trackDiscoveredLinks: Boolean = true,
     /** Keyed robots state (fetcher/robots.go:19 24h TTL;
       * host_state_repository.go:55-70 caches robots_txt per host): each
       * batch serves claim hosts from the robots cache in host_state and
@@ -48,16 +49,8 @@ final case class EngineConfig(
       * never change mid-drain (CrawlParitySpec asserts both).
       */
     useKeyedRobotsState: Boolean = false,
+    /** Robots cache lifetime in virtual millis (keyed-robots mode). */
     robotsTtlMs: Long = 24L * 3600L * 1000L,
-    /** Fetch-lookup broadcast gate (sandbox HTTP stand-in): corpora within
-      * BOTH bounds broadcast once and probe per claim; anything larger
-      * falls back to the cached co-partitioned join. The byte bound is
-      * the real guard — row counts alone let a heavy-HTML corpus OOM the
-      * driver; bytes come from Catalyst plan stats (parquet footers for
-      * file scans).
-      */
-    fetchBroadcastMaxRows: Long = 2000000L,
-    fetchBroadcastMaxBytes: Long = 4L << 30,
     /** Settled-segment chain cap per bucket: a batch APPENDS one settled
       * segment per touched bucket (the append-only frontier — never an
       * O(frontier) rewrite); when a bucket's chain exceeds this, the
@@ -68,35 +61,23 @@ final case class EngineConfig(
     maxSettledSegments: Int = 8
 )
 
-/** Engine-internal rows (kept flat for stable encoders). */
-private[engine] final case class FetchState(
-    claim: FrontierUrl,
-    hops: Int,
-    lookupHash: String,
-    failReason: String, // "" = still fetching / ok
-    page: Option[PageRow]
-)
-
+/** One claim's fetch result: the per-batch cache every downstream stage
+  * reads.
+  */
 private[engine] final case class Resolved(
     claim: FrontierUrl,
     outcome: String, // fetched | dead | failed
     reason: String,
-    finalUrl: String, // "" = none/unchanged
+    finalUrl: String, // "" = not fetched; else the final page URL (link base)
     contentHash: String, // "" = none
     docId: String, // "" = no doc indexed
-    spans: Seq[Span],
-    links: Seq[String],
-    pageUrl: String, // final page canonical URL (base for link resolution)
-    /** Broadcast-corpus re-probe key (optimization r6): when the fetch
-      * runs off the corpus broadcast, the persisted cache stores this
-      * key with EMPTY spans/links — the two consumers that need page
-      * payloads (docs sink, link discovery) binary-search the broadcast
-      * again instead of the cache columnar-encoding every span struct
-      * and href of every fetched page per batch (guide §8: cache the
-      * lightweight proxy, move heavy bytes once). "" = payloads inline
-      * (the co-partitioned-join fallback path).
+    /** url_hash of the indexed page ("" iff docId is): the docs sink and
+      * link discovery re-probe the corpus broadcast for its spans and
+      * links instead of the cache columnar-encoding every span struct and
+      * href of every fetched page per batch (cache the lightweight proxy,
+      * move heavy bytes once).
       */
-    lookupHash: String = ""
+    lookupHash: String
 )
 
 private[engine] final case class SubFirst(
@@ -163,6 +144,15 @@ private[engine] final case class RobotsEff(host: String, body: String,
   *   - The seen-set bloom prefilter is per-bucket sidecar filters built
   *     distributed (one pass, no driver collect of hashes), persisted
   *     beside the bucket parquet and tracked in the manifest.
+  *
+  * Constructing an engine sets two SQL confs on `spark`, and they are
+  * SESSION-GLOBAL: they stay set for every later query on that session,
+  * engine or not.
+  *   - `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` =
+  *     1048576 keys (Spark's default is 128).
+  *   - `spark.sql.inMemoryColumnarStorage.compressed` = false, so caches
+  *     built on the session afterwards are stored uncompressed.
+  * Pass a session the engine may own, or reset them after the drain.
   */
 final class CrawlEngine(
     spark: SparkSession,
@@ -189,13 +179,11 @@ final class CrawlEngine(
   }.toMap
   private val robotsBc = spark.sparkContext.broadcast(robotsMap)
 
-  /** Parquet codec for every engine sink (state leaves + append tables).
-    * Parameterised (env) so the snappy-vs-zstd byte/CPU trade is a
-    * measurement, not a guess; default snappy (optimization r6: zstd was
-    * A/B'd on the bench drain — see OPTIMIZATION_r06.md).
+  /** Parquet codec for every engine sink (state leaves + append tables):
+    * snappy (optimization r6 A/B'd zstd on the bench drain — see
+    * OPTIMIZATION_r06.md).
     */
-  private val parquetCodec =
-    sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "snappy")
+  private val parquetCodec = "snappy"
 
   // The engine's argmin/argmax aggregations (claims, submission
   // aggregate, links last-wins) are TypedImperativeAggregates so they
@@ -206,19 +194,17 @@ final class CrawlEngine(
   // (local: one partition can hold every host). Keys are bounded by
   // hosts (claims) / submissions per partition, so 1M bounds the object
   // map at low hundreds of MB locally; clusters with many partitions sit
-  // far below it. Env-parameterised like the other deployment knobs.
+  // far below it.
   spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-    sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "1048576"))
+    "1048576")
 
   // The per-batch caches (claims / resolved / submissions / subAgg) are
   // built and dropped within one micro-batch; stack profiling showed the
   // columnar cache BUILD (ColumnBuilder append + per-column
   // compressibility stats) as the hottest executor frame group in a
   // drain. Cache compression trades CPU on the batch's critical path for
-  // memory none of these short-lived caches needs — off by default,
-  // env-parameterised for memory-tight deployments.
-  spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed",
-    sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESS", "false"))
+  // memory none of these short-lived caches needs.
+  spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
 
   /** The robots "web server" as a function of virtual time: initial rows
     * effective from the beginning, updates from their instant. Broadcast
@@ -230,108 +216,44 @@ final class CrawlEngine(
       (robotsRows.map(r => (Long.MinValue, r)) ++ robotsUpdates)
         .groupBy(_._2.host).map { case (h, xs) => h -> xs.sortBy(_._1) })
 
-  /** Corpus pre-partitioned AND pre-sorted ONCE by the fetch-join key:
-    * the cached scan keeps both the partitioning and the ordering, so the
-    * per-batch lookup join neither re-shuffles nor re-sorts the corpus
-    * side — only the (small) claim side moves. Partition count is the
-    * engine's bucket knob, NOT the session's shuffle default: at
-    * local[1] the default collapsed the columnar cache build into ONE
-    * giant-buffer task (minutes of copy for a 600 MB corpus). LAZY — the
-    * broadcast fast path never builds this cache at all.
-    */
-  private lazy val pagesCached =
-    pages.repartition(math.max(cfg.numBuckets, 4), col("url_hash"))
-      .sortWithinPartitions("url_hash").cache()
-
-  /** The gate + one-pass corpus collect for the broadcast fast path.
-    *
-    * File-backed corpora (parquet) gate on PLAN stats — the footer-true
-    * byte size — and collect straight from the scan: no columnar cache is
-    * ever built for them (measured: caching a 600 k-page corpus cost a
-    * ~517 s single-task columnar build that exists only to be read once).
-    * Sources with no real stats (a generated/in-memory corpus reports the
-    * defaultSizeInBytes sentinel, which must never veto the broadcast —
-    * that silently demoted every bench fetch to the join fallback once)
-    * materialize the co-partitioned cache and gate on its measured bytes.
-    * Row gate first in both paths: the driver never collects more than
-    * fetchBroadcastMaxRows.
-    */
-  private lazy val corpusCollected: Option[Array[PageRow]] = {
-    val statsBytes = pages.queryExecution.optimizedPlan.stats.sizeInBytes
-    val sentinel = BigInt(spark.sessionState.conf.defaultSizeInBytes)
-    if (statsBytes < sentinel) {
-      if (statsBytes > BigInt(cfg.fetchBroadcastMaxBytes)) None
-      else {
-        val n = pages.count()
-        if (n > cfg.fetchBroadcastMaxRows) None
-        else Some(pages.collect())
-      }
-    } else {
-      val n = pagesCached.count()
-      val est = pagesCached.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (n <= cfg.fetchBroadcastMaxRows &&
-          est <= BigInt(cfg.fetchBroadcastMaxBytes))
-        Some(pagesCached.collect())
-      else None
-    }
-  }
-
-  /** Redirect topology (url_hash → redirect_to) broadcast once per drain:
-    * redirect rows are sparse corpus metadata, so the whole fetch stage —
-    * chain following included — is ONE distributed pass + one join instead
-    * of a join per hop. (A live-HTTP fetcher has the same single-pass shape:
-    * the redirect loop happens per row inside the fetch task.) Built from
-    * the already-collected corpus when the fast path took it.
-    */
-  private lazy val redirectBc = spark.sparkContext.broadcast(
-    corpusCollected match {
-      case Some(rows) => rows.iterator
-        .filter(p => p.status_code >= 300 && p.status_code < 400 &&
-          p.redirect_to.nonEmpty)
-        .map(p => p.url_hash -> p.redirect_to).toMap
-      case None => pagesCached
-        .filter(p => p.status_code >= 300 && p.status_code < 400 && p.redirect_to.nonEmpty)
-        .map(p => p.url_hash -> p.redirect_to)
-        .collect().toMap
-    })
-
-  /** Page lookup broadcast: the corpus is the sandbox stand-in for HTTP
-    * I/O, whose real cost is per-CLAIM, not per-corpus — a join against
-    * the whole corpus table re-streams "the web" every micro-batch, which
-    * misprices the engine. Corpora within the gate broadcast once and are
-    * probed per claim; larger ones fall back to the cached co-partitioned
-    * join (a real 100 TB deployment replaces this stage with its fetch
-    * service entirely).
+  /** The corpus lookup, broadcast once per engine: the corpus is the
+    * offline stand-in for HTTP I/O, whose real cost is per CLAIM, not per
+    * corpus, so every claim probes it (redirect hops included) inside one
+    * fetch task (a real deployment replaces this with its fetch service).
     *
     * Broadcast as PARALLEL SORTED ARRAYS (url_hash-sorted rows + the hash
     * column), probed by binary search — not a Map: the BlockManager runs
     * SizeEstimator over a stored broadcast value, which WALKS a map's
     * every entry (minutes of driver time for 600 k nested rows) but
     * SAMPLES large arrays.
+    *
+    * The collect reads the scan directly (no columnar cache: caching a
+    * 600 k-page corpus once cost a ~517 s single-task build). It is
+    * size-checked first, so an oversized corpus fails here, naming its
+    * size, instead of exhausting the driver: by row count, and by plan
+    * stats when the scan has real ones (parquet footers, local data; a
+    * generated corpus reports the defaultSizeInBytes sentinel, which
+    * must not fail it).
     */
   private lazy val pagesLookupBc
-      : Option[org.apache.spark.broadcast.Broadcast[(Array[String], Array[PageRow])]] =
-    corpusCollected.map { rows =>
-      val sorted = rows.sortBy(_.url_hash)
-      spark.sparkContext.broadcast((sorted.map(_.url_hash), sorted))
-    }
-
-  /** Whether the per-claim fetch probe runs off the corpus broadcast
-    * (vs the cached co-partitioned join fallback). Diagnostic — the two
-    * paths are parity-identical; only the cost model differs.
-    */
-  def fetchUsesBroadcast: Boolean = pagesLookupBc.isDefined
-
-  /** Materialize the corpus lookup structures up front (bench: the
-    * corpus is the test stand-in for HTTP I/O, not engine work to
-    * measure). The fallback-join cache only builds when the broadcast
-    * gate rejected the corpus.
-    */
-  def warmCorpus(): Long = {
-    redirectBc
-    pagesLookupBc
-    corpusCollected.map(_.length.toLong).getOrElse(pagesCached.count())
+      : org.apache.spark.broadcast.Broadcast[(Array[String], Array[PageRow])] = {
+    val statsBytes = pages.queryExecution.optimizedPlan.stats.sizeInBytes
+    val sentinel = BigInt(spark.sessionState.conf.defaultSizeInBytes)
+    require(statsBytes >= sentinel || statsBytes <= CrawlEngine.CorpusMaxBytes,
+      s"corpus too large to broadcast: $statsBytes bytes by plan stats " +
+        s"(limit ${CrawlEngine.CorpusMaxBytes})")
+    val n = pages.count()
+    require(n <= CrawlEngine.CorpusMaxRows,
+      s"corpus too large to broadcast: $n rows (limit ${CrawlEngine.CorpusMaxRows})")
+    val sorted = pages.collect().sortBy(_.url_hash)
+    spark.sparkContext.broadcast((sorted.map(_.url_hash), sorted))
   }
+
+  /** Materialize the corpus lookup up front (bench: the corpus is the
+    * test stand-in for HTTP I/O, not engine work to measure). Returns the
+    * corpus row count.
+    */
+  def warmCorpus(): Long = pagesLookupBc.value._1.length.toLong
 
   var clock: Long = CrawlDefaults.VirtualEpochMs
   var batchId: Long = 0L
@@ -361,7 +283,7 @@ final class CrawlEngine(
 
   // ------------------------------------------------------------------ bloom
 
-  /** Per-bucket seen-set filters (sidecars): cuckoo by default with a
+  /** Per-bucket seen-set filters (sidecars): cuckoo, with a
     * per-bucket bloom fallback at capacity, per the north star. Filters
     * LIVE WITH THEIR BUCKETS: they are built, updated, and persisted on
     * executors (one mapGroups task per delta bucket, reading the freshly
@@ -376,12 +298,12 @@ final class CrawlEngine(
 
   private def initBloom(): Unit = if (cfg.useBloomPrefilter) {
     val expected = bloomExpectedPerBucket
-    val fpp = cfg.bloomFpp
-    val kind = cfg.seenFilterKind
+    val fpp = CrawlEngine.SeenFilterFpp
     val dir = store.dataPath(s"bloom_v$batchId")
     val built = frontier().groupByKey(_.bucket).mapGroups { (b, it) =>
       (b, CrawlEngine.writeFilterFile(dir, b,
-        SeenFilter.build(kind, expected, fpp, it.map(_.url_hash))))
+        SeenFilter.build(SeenFilter.KindCuckoo, expected, fpp,
+          it.map(_.url_hash))))
     }.collect()
     bloomPaths = built.toMap
     // commit immediately: until a manifest references the fresh sidecars,
@@ -406,8 +328,7 @@ final class CrawlEngine(
       val dir = store.dataPath(s"bloom_v$bid")
       val pathsBc = spark.sparkContext.broadcast(bloomPaths)
       val expected = bloomExpectedPerBucket
-      val fpp = cfg.bloomFpp
-      val kind = cfg.seenFilterKind
+      val fpp = CrawlEngine.SeenFilterFpp
       val cacheCap = CrawlEngine.filterCacheCap(cfg.numBuckets)
       val updated = spark.read.schema(insertReadSchema).parquet(deltaLeaves: _*)
         .as[(Int, String, String)]
@@ -421,7 +342,7 @@ final class CrawlEngine(
           // later reader of the old path
           var f = existingPath
             .map(p => CrawlEngine.loadFilterCached(p, cacheCap).copyFilter())
-            .getOrElse(SeenFilter.create(kind, expected, fpp))
+            .getOrElse(SeenFilter.create(SeenFilter.KindCuckoo, expected, fpp))
           var degraded = false
           var touched = existingPath.isEmpty
           it.foreach { case (_, h, tag) =>
@@ -1211,24 +1132,6 @@ final class CrawlEngine(
         .parquet(store.dataPath(s"claim_log_v$bid"))
     })
 
-    // ---- X2 robots gate (before fetch; blocked rows never touch the host)
-    //      + X3 redirect-chain resolution (fetcher/redirect.go:16-23) in one
-    //      distributed pass using the broadcast redirect topology ----
-    val redirects = redirectBc
-    def gateAndChain(r: FrontierUrl, allowed: Boolean): FetchState =
-      if (!allowed) FetchState(r, 0, "", CrawlDefaults.ReasonRobotsBlocked, None)
-      else {
-        var hash = r.url_hash
-        var hops = 0
-        var fail = ""
-        while (fail.isEmpty && redirects.value.contains(hash)) {
-          hops += 1
-          if (hops > maxRedirects) fail = CrawlDefaults.ReasonTooManyRedirects
-          else hash = UrlNormalizer.sha256Hex(redirects.value(hash))
-        }
-        FetchState(r, hops, hash, fail, None)
-      }
-
     // Keyed-robots mode: claim hosts are served from the robots cache in
     // host_state; only hosts whose TTL lapsed consult the (broadcast)
     // robots timeline at `now`. All joins are claim-host-sized broadcasts;
@@ -1263,103 +1166,30 @@ final class CrawlEngine(
             }
           }.persist()
         // LAZY: no eager count() job — the first consumer (the gate's
-        // broadcast inside the fetch chain, or the host write) computes
+        // broadcast inside the fetch map, or the host write) computes
         // the cached plan, so keyed-robots mode costs no extra serial
         // job per batch; the persist dedups across the two consumers
         eff
       })
 
+    // ---- the fetch stage: X2 robots gate → X3 redirect chain → page
+    //      probe → X4-X6 outcome dispatch, one typed map per claim against
+    //      the corpus broadcast (see CrawlEngine.fetchClaim) ----
+    // (local vals: the closures must not capture `this`)
+    val corpus = pagesLookupBc
     val ua = cfg.userAgent
-    val gated: Dataset[FetchState] = robotsEffDs match {
+    val resolved: Dataset[Resolved] = (robotsEffDs match {
       case None => claims.map { r =>
-        val path = GoUrl.parse(r.url).map(_.path).getOrElse("/")
-        gateAndChain(r,
-          robots.value.getOrElse(r.host, RobotsRules.AllowAll).isAllowed(path))
+        CrawlEngine.fetchClaim(corpus.value, r,
+          robots.value.getOrElse(r.host, RobotsRules.AllowAll), maxRedirects)
       }
       case Some(eff) =>
         claims.joinWith(broadcast(eff), claims("host") === eff("host"))
           .map { case (r, e) =>
-            val path = GoUrl.parse(r.url).map(_.path).getOrElse("/")
-            gateAndChain(r,
-              RobotsRules.fromResponse(e.body, e.status, ua).isAllowed(path))
+            CrawlEngine.fetchClaim(corpus.value, r,
+              RobotsRules.fromResponse(e.body, e.status, ua), maxRedirects)
           }
-    }
-
-    // the fetch I/O stage: per-claim broadcast-map probe (the honest model
-    // of per-URL HTTP cost), or a single lookup join against the cached
-    // co-partitioned corpus for oversized corpora
-    val fetchStates = pagesLookupBc match {
-      case Some(bc) =>
-        gated.map { s =>
-          if (s.failReason.nonEmpty) s
-          else {
-            val (hashes, rows) = bc.value
-            val i = java.util.Arrays.binarySearch(
-              hashes.asInstanceOf[Array[AnyRef]], s.lookupHash)
-            if (i < 0) s.copy(failReason = "fetch_error")
-            else s.copy(page = Some(rows(i)))
-          }
-        }
-      case None =>
-        val toFetch = gated.filter(_.failReason.isEmpty)
-        gated.filter(_.failReason.nonEmpty).union(
-          toFetch.joinWith(pagesCached,
-              toFetch("lookupHash") === pagesCached("url_hash"), "left_outer")
-            .map { case (s, pageOrNull) =>
-              Option(pageOrNull) match {
-                case None    => s.copy(failReason = "fetch_error")
-                case Some(p) => s.copy(page = Some(p))
-              }
-            })
-    }
-
-    // ---- X4-X6 outcome dispatch ----
-    // `slim`: with the corpus broadcast available, the cache stores the
-    // re-probe key instead of the page payloads (see Resolved.lookupHash)
-    val slim = pagesLookupBc.isDefined
-    val resolved: Dataset[Resolved] = fetchStates.map { s =>
-      val r = s.claim
-      if (s.failReason == CrawlDefaults.ReasonRobotsBlocked)
-        Resolved(r, "dead", s.failReason, "", "", "", Nil, Nil, "")
-      else if (s.failReason.nonEmpty) // fetch_error / too_many_redirects
-        Resolved(r, "failed", s.failReason, "", "", "", Nil, Nil, "")
-      else {
-        val p = s.page.get
-        p.status_code match {
-          case 200 =>
-            if (!ContentUrl.isHtmlContent(p.content_type))
-              Resolved(r, "dead", CrawlDefaults.ReasonUnsupportedContentType,
-                "", "", "", Nil, Nil, p.url)
-            else if (ContentUrl.isBinaryUrl(r.url))
-              Resolved(r, "dead", CrawlDefaults.ReasonBinaryUrl,
-                "", "", "", Nil, Nil, p.url)
-            else if (!p.extract_ok)
-              Resolved(r, "dead", CrawlDefaults.ReasonExtractFailed,
-                "", "", "", Nil, Nil, p.url)
-            else {
-              val contentHash = UrlNormalizer.sha256Hex(
-                p.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-              if (slim)
-                Resolved(r, "fetched", "", p.url, contentHash,
-                  UrlNormalizer.sha256Hex(r.url), Nil, Nil, p.url,
-                  s.lookupHash)
-              else
-                Resolved(r, "fetched", "", p.url, contentHash,
-                  UrlNormalizer.sha256Hex(r.url), p.spans, p.links, p.url)
-            }
-          case 304 =>
-            Resolved(r, "fetched", "", p.url, "", "", Nil, Nil, p.url)
-          case 404 =>
-            Resolved(r, "dead", CrawlDefaults.ReasonNotFound,
-              "", "", "", Nil, Nil, p.url)
-          case c if c == 429 || c >= 500 =>
-            Resolved(r, "failed", s"http status $c", "", "", "", Nil, Nil, p.url)
-          case c =>
-            Resolved(r, "failed", s"unexpected http status $c",
-              "", "", "", Nil, Nil, p.url)
-        }
-      }
-    }.persist()
+    }).persist()
 
     // ---- X7 final-URL re-key candidates (23505 semantics) ----
     // Column-form over the pruned resolved cache (optimization r6): the
@@ -1453,18 +1283,12 @@ final class CrawlEngine(
       writeHostBuckets(newHs, claimsBuckets, bid)
     })
 
-    // the payload consumers re-probe the broadcast when the cache is slim
-    // (local val: the closures must not capture `this`)
-    val lk = pagesLookupBc
-
     // ---- docs sink (ES-index analog; one doc per fetched 200 page) ----
     val docsF = Future(timed("docs_write") {
       resolved.filter(o => o.docId.nonEmpty)
         .map { o =>
-          val spans =
-            if (o.lookupHash.isEmpty) o.spans
-            else CrawlEngine.probePage(lk.get.value, o.lookupHash).spans
-          (o.docId, o.claim.url, spans, bid)
+          (o.docId, o.claim.url,
+            CrawlEngine.probePage(corpus.value, o.lookupHash).spans, bid)
         }
         .toDF("doc_id", "url", "spans", "batch_id")
         .write.mode("overwrite").option("compression", parquetCodec).parquet(store.dataPath(s"docs_v$bid"))
@@ -1472,16 +1296,14 @@ final class CrawlEngine(
 
     // ---- F3 link discovery → submissions ----
     val submissions: Dataset[SubRow] = resolved.flatMap { o =>
-      if (o.outcome != "fetched" || o.claim.depth + 1 > maxDepth) Nil
+      // only an indexed 200 page has links (a 304 is fetched without
+      // content, like the oracle's)
+      if (o.docId.isEmpty || o.claim.depth + 1 > maxDepth) Nil
       else {
-        val links =
-          if (o.lookupHash.isEmpty) o.links
-          else CrawlEngine.probePage(lk.get.value, o.lookupHash).links
-        if (links.isEmpty) Nil
-        else {
+        val links = CrawlEngine.probePage(corpus.value, o.lookupHash).links
         // the page's base URL parses ONCE per page, not once per link
         // (GoUrl.absoluteUrl re-parses it for every href)
-        val baseE = GoUrl.parse(o.pageUrl)
+        val baseE = GoUrl.parse(o.finalUrl)
         links.zipWithIndex.flatMap { case (href, li) =>
           // inlined ContentUrl.shouldSkipLink, keeping the href parse for
           // the resolve step: skip empty, unparseable, or
@@ -1509,12 +1331,11 @@ final class CrawlEngine(
                   // (colly rewrites e.Request.URL after redirects)
                   Some(SubRow(-o.claim.priority, o.claim.next_fetch_at,
                     o.claim.url_hash, li, Submission(u, h, host, o.claim.source_id,
-                      FrontierOrigin.Spider, Some(o.pageUrl), o.claim.depth + 1,
+                      FrontierOrigin.Spider, Some(o.finalUrl), o.claim.depth + 1,
                       prio, now)))
                 case Left(_) => None
               }
           }
-        }
         }
       }
     }.persist() // link extraction+normalization runs ONCE; the frontier
@@ -1535,44 +1356,42 @@ final class CrawlEngine(
     // (discovered_link_repository.go:46-59). Chained AFTER sub_buckets so
     // it reads the now-populated submissions cache.
     val srcNames = sourceNamesBc
-    val linksF =
-      if (!cfg.trackDiscoveredLinks) Future.unit
-      else subBucketsF.map(_ => timed("links_write") {
-        // nested-field projection, not a typed map (optimization r6): the
-        // registry-resolved display name (link_handler.go:396; fallback =
-        // the id) comes from a tiny broadcast join when the registry is
-        // non-empty instead of a per-row closure over the whole cache
-        val base = submissions.toDF().select(
-          $"s.source_id".as("source_id"), $"s.url_hash".as("url_hash"),
-          $"s.url".as("url"), $"s.host".as("domain"),
-          $"s.parent_url".as("parent_url"), $"s.depth".as("depth"),
-          $"s.priority".as("priority"), $"negPrio", $"nfa", $"claimHash",
-          $"li")
-        val names = srcNames.value
-        val named =
-          if (names.isEmpty) base.withColumn("source_name", $"source_id")
-          else base.join(
-              broadcast(names.toSeq.toDF("source_id", "source_name0")),
-              Seq("source_id"), "left_outer")
-            .withColumn("source_name",
-              coalesce($"source_name0", $"source_id"))
-            .drop("source_name0")
-        named
-          .groupBy($"source_id", $"source_name", $"url_hash")
-          .agg(graft.functions.AggExpressions.max_by_obj(
-            struct($"url", $"domain", $"parent_url", $"depth", $"priority"),
-            struct($"negPrio", $"nfa", $"claimHash", $"li")).as("last"))
-          .select($"source_id", $"source_name",
-            $"last.url".as("url"), $"url_hash",
-            $"last.parent_url".as("parent_url"), $"last.depth".as("depth"),
-            $"last.domain".as("domain"),
-            lit(null).cast("int").as("http_status"),
-            lit(null).cast("string").as("content_type"),
-            nowL.as("discovered_at"), nowL.as("queued_at"),
-            lit("pending").as("status"), $"last.priority".as("priority"),
-            bidL.as("batch_id"))
-          .write.mode("overwrite").option("compression", parquetCodec).parquet(store.dataPath(s"links_v$bid"))
-      })
+    val linksF = subBucketsF.map(_ => timed("links_write") {
+      // nested-field projection, not a typed map (optimization r6): the
+      // registry-resolved display name (link_handler.go:396; fallback =
+      // the id) comes from a tiny broadcast join when the registry is
+      // non-empty instead of a per-row closure over the whole cache
+      val base = submissions.toDF().select(
+        $"s.source_id".as("source_id"), $"s.url_hash".as("url_hash"),
+        $"s.url".as("url"), $"s.host".as("domain"),
+        $"s.parent_url".as("parent_url"), $"s.depth".as("depth"),
+        $"s.priority".as("priority"), $"negPrio", $"nfa", $"claimHash",
+        $"li")
+      val names = srcNames.value
+      val named =
+        if (names.isEmpty) base.withColumn("source_name", $"source_id")
+        else base.join(
+            broadcast(names.toSeq.toDF("source_id", "source_name0")),
+            Seq("source_id"), "left_outer")
+          .withColumn("source_name",
+            coalesce($"source_name0", $"source_id"))
+          .drop("source_name0")
+      named
+        .groupBy($"source_id", $"source_name", $"url_hash")
+        .agg(graft.functions.AggExpressions.max_by_obj(
+          struct($"url", $"domain", $"parent_url", $"depth", $"priority"),
+          struct($"negPrio", $"nfa", $"claimHash", $"li")).as("last"))
+        .select($"source_id", $"source_name",
+          $"last.url".as("url"), $"url_hash",
+          $"last.parent_url".as("parent_url"), $"last.depth".as("depth"),
+          $"last.domain".as("domain"),
+          lit(null).cast("int").as("http_status"),
+          lit(null).cast("string").as("content_type"),
+          nowL.as("discovered_at"), nowL.as("queued_at"),
+          lit("pending").as("status"), $"last.priority".as("priority"),
+          bidL.as("batch_id"))
+        .write.mode("overwrite").option("compression", parquetCodec).parquet(store.dataPath(s"links_v$bid"))
+    })
 
     // ---- distributed re-key resolution (X7, frontier_repository.go:216-263)
     // runs on this thread while sub_buckets materializes concurrently ----
@@ -2063,14 +1882,74 @@ final class CrawlEngine(
 }
 
 private[engine] object CrawlEngine {
-  /** Binary-search probe of the broadcast corpus arrays (url_hash-sorted).
-    * Callers only probe hashes the fetch stage already resolved, so the
-    * key is always present.
+  /** Corpus size limits for the fetch broadcast (driver collect). */
+  val CorpusMaxRows: Long = 2000000L
+  val CorpusMaxBytes: Long = 4L << 30
+
+  /** Seen-filter false-positive target (bloom fallback sizing). */
+  val SeenFilterFpp = 0.03
+
+  /** Index of `hash` in the url_hash-sorted corpus arrays; negative on a
+    * miss.
     */
-  def probePage(bcv: (Array[String], Array[PageRow]), hash: String): PageRow = {
-    val i = java.util.Arrays.binarySearch(
-      bcv._1.asInstanceOf[Array[AnyRef]], hash)
-    bcv._2(i)
+  private def probeIndex(corpus: (Array[String], Array[PageRow]),
+      hash: String): Int =
+    java.util.Arrays.binarySearch(corpus._1.asInstanceOf[Array[AnyRef]], hash)
+
+  /** Must-hit probe for the payload consumers (docs sink, link
+    * discovery): they only probe pages the fetch stage resolved, so a
+    * miss is an invariant violation and fails naming the hash.
+    */
+  def probePage(corpus: (Array[String], Array[PageRow]), hash: String): PageRow = {
+    val i = probeIndex(corpus, hash)
+    require(i >= 0, s"corpus probe miss: $hash")
+    corpus._2(i)
+  }
+
+  /** One claim's fetch, the engine form of CrawlOracle.processClaim: the
+    * robots gate (X2, before any fetch), then the redirect chain probed
+    * hop by hop against the corpus (fetcher/redirect.go:16-23; a missing
+    * hop is a fetch_error), then status dispatch (worker.go:308-437).
+    */
+  def fetchClaim(corpus: (Array[String], Array[PageRow]), r: FrontierUrl,
+      rules: RobotsRules, maxRedirects: Int): Resolved = {
+    def dead(reason: String) = Resolved(r, "dead", reason, "", "", "", "")
+    def failed(reason: String) = Resolved(r, "failed", reason, "", "", "", "")
+    @scala.annotation.tailrec
+    def follow(hash: String, hops: Int): Either[String, PageRow] = {
+      val i = probeIndex(corpus, hash)
+      if (i < 0) Left("fetch_error")
+      else {
+        val p = corpus._2(i)
+        if (p.status_code < 300 || p.status_code >= 400 || p.redirect_to.isEmpty)
+          Right(p)
+        else if (hops == maxRedirects) Left(CrawlDefaults.ReasonTooManyRedirects)
+        else follow(UrlNormalizer.sha256Hex(p.redirect_to), hops + 1)
+      }
+    }
+    val path = GoUrl.parse(r.url).map(_.path).getOrElse("/")
+    if (!rules.isAllowed(path)) dead(CrawlDefaults.ReasonRobotsBlocked)
+    else follow(r.url_hash, 0) match {
+      case Left(reason) => failed(reason)
+      case Right(p) => p.status_code match {
+        case 200 =>
+          if (!ContentUrl.isHtmlContent(p.content_type))
+            dead(CrawlDefaults.ReasonUnsupportedContentType)
+          else if (ContentUrl.isBinaryUrl(r.url))
+            dead(CrawlDefaults.ReasonBinaryUrl)
+          else if (!p.extract_ok) dead(CrawlDefaults.ReasonExtractFailed)
+          else {
+            val contentHash = UrlNormalizer.sha256Hex(
+              p.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
+            Resolved(r, "fetched", "", p.url, contentHash,
+              UrlNormalizer.sha256Hex(r.url), p.url_hash)
+          }
+        case 304 => Resolved(r, "fetched", "", p.url, "", "", "")
+        case 404 => dead(CrawlDefaults.ReasonNotFound)
+        case c if c == 429 || c >= 500 => failed(s"http status $c")
+        case c => failed(s"unexpected http status $c")
+      }
+    }
   }
 
   /** Executor-safe sidecar write: create the version dir (idempotent,

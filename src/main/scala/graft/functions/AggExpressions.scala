@@ -108,8 +108,11 @@ case class ObjArgExtremum(
   @transient private lazy val pairProjection = UnsafeProjection.create(
     Array(orderingExpr.dataType, valueExpr.dataType))
 
+  // copy() first: getBytes alone returns the projection's reused buffer
+  // whenever the row fills it exactly (fixed-width pairs do), so a later
+  // serialize would overwrite this one's bytes
   override def serialize(buf: ArgExtremumBuf): Array[Byte] =
-    pairProjection(InternalRow(buf.ord, buf.value)).getBytes
+    pairProjection(InternalRow(buf.ord, buf.value)).copy().getBytes
 
   override def deserialize(bytes: Array[Byte]): ArgExtremumBuf = {
     val row = new UnsafeRow(2)

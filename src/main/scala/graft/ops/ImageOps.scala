@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -45,7 +46,7 @@ object ImageOps {
       val out = new MemoryCacheImageOutputStream(bos)
       writer.setOutput(out)
       writer.write(img)
-      out.flush()
+      out.close() // flushes into bos; bos itself stays open for reuse
       bos.toByteArray
     }
 
@@ -58,6 +59,13 @@ object ImageOps {
     }
 
     def dispose(): Unit = { writer.dispose(); reader.dispose() }
+  }
+
+  /** A codec for the current task, disposed when the task completes. */
+  private def taskCodec(): PngCodec = {
+    val codec = new PngCodec
+    TaskContext.get().addTaskCompletionListener[Unit](_ => codec.dispose())
+    codec
   }
 
   /** width 2..17, height 2..9, uniform gray fill `doc_id % 256`. */
@@ -104,7 +112,7 @@ object ImageOps {
     import spark.implicits._
     docs.select("doc_id").as[Long]
       .mapPartitions { it =>
-        val codec = new PngCodec
+        val codec = taskCodec()
         it.map(id => (id, codec.encode(synthImage(id)), "image/png"))
       }
       .toDF("doc_id", "payload", "media_type")
@@ -116,7 +124,7 @@ object ImageOps {
     import spark.implicits._
     payloads.select("doc_id", "payload").as[(Long, Array[Byte])]
       .mapPartitions { it =>
-        val codec = new PngCodec
+        val codec = taskCodec()
         it.map { case (id, bytes) => measure(id, codec.decode(bytes)) }
       }
       .toDF()
@@ -131,7 +139,7 @@ object ImageOps {
     import spark.implicits._
     docs.select("doc_id").as[Long]
       .mapPartitions { it =>
-        val codec = new PngCodec
+        val codec = taskCodec()
         it.map { id =>
           measure(id, codec.decode(codec.encode(synthImage(id))))
         }

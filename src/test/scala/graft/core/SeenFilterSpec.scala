@@ -43,7 +43,7 @@ class SeenFilterSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(mk().serialize(), mk().serialize()))
   }
 
-  test("serialize round-trips for cuckoo, bloom, and degraded") {
+  test("serialize round-trips for cuckoo and bloom") {
     val ks = keys(500, "rt")
     for (kind <- Seq(SeenFilter.KindCuckoo, SeenFilter.KindBloom)) {
       val f = SeenFilter.create(kind, 1000, 0.03)
@@ -51,8 +51,6 @@ class SeenFilterSpec extends AnyFunSuite {
       val g = SeenFilter.deserialize(f.serialize())
       assert(ks.forall(g.mightContain), s"$kind round-trip")
     }
-    val d = SeenFilter.deserialize(new DegradedSeenFilter().serialize())
-    assert(d.mightContain("anything"))
   }
 
   test("build: cuckoo at capacity falls back to a bloom over the SAME keys") {

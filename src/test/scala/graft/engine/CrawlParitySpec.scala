@@ -330,11 +330,6 @@ class CrawlParitySpec extends AnyFunSuite {
       e.runDrain()
       e
     }
-    // explicit bloom kind
-    val eBloom = drained(base.copy(useBloomPrefilter = true,
-      seenFilterKind = graft.core.SeenFilter.KindBloom))
-    assert(engineClaims(eBloom) == engineClaims(eOff), "bloom kind claims")
-    assert(engineState(eBloom) == engineState(eOff), "bloom kind state")
     // cuckoo forced past capacity: ONE bucket, ~30-slot table vs 80+
     // URLs — the degrade + rebuild-as-bloom path must stay exact. Claim
     // logs and the compared state fields are bucket-count independent,
@@ -528,37 +523,24 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(engineState(e3) == stateBefore, "resumed frontier state")
   }
 
-  test("fetch-broadcast byte budget: over-bound corpus joins instead, parity intact") {
+  test("fetch-broadcast byte budget: generated (stat-less) corpus within bounds broadcasts") {
+    // a mapPartitions-generated corpus has NO catalyst stats: it reports
+    // the defaultSizeInBytes sentinel, which must not fail the size check
     val p = CorpusParams(numHosts = 4, pagesPerHost = 6, skewHosts = 1,
       skewFactor = 2, outdegree = 3)
-    val pages = Corpus.allPages(p)
-    val robots = Corpus.robots(p)
     val seeds = Corpus.seeds(p)
     val cfg = EngineConfig(numBuckets = 8, maxDepth = 8)
-    val (eBc, _) = runBoth(pages, robots, seeds, cfg)
-    // zero byte budget forces the cached co-partitioned join fallback
-    val eJoin = mkEngine(pages, robots, cfg.copy(fetchBroadcastMaxBytes = 0L))
-    eJoin.seed(seeds)
-    eJoin.runDrain()
-    assert(engineClaims(eJoin) == engineClaims(eBc), "claim logs")
-    assert(engineState(eJoin) == engineState(eBc), "frontier state")
-  }
-
-  test("fetch-broadcast byte budget: generated (stat-less) corpus within bounds broadcasts") {
-    // a mapPartitions-generated corpus (the bench's shape) has NO catalyst
-    // stats pre-cache — the sentinel sizeInBytes once silently vetoed the
-    // broadcast and demoted every bench fetch to the per-batch join
-    // fallback (537 s/batch at p1). The gate must measure the MATERIALIZED
-    // cache, which knows the real bytes.
-    val p = CorpusParams(numHosts = 4, pagesPerHost = 6, skewHosts = 1,
-      skewFactor = 2, outdegree = 3)
     val genPages = spark.range(p.totalPages)
       .mapPartitions(it => it.map(i => Corpus.pageAt(p, i)))
-    val e = new CrawlEngine(spark, newStore(), genPages, Corpus.robots(p),
-      EngineConfig(numBuckets = 8, maxDepth = 8))
-    e.warmCorpus()
-    assert(e.fetchUsesBroadcast,
-      "within-bounds generated corpus must take the broadcast fast path")
+    val eGen = new CrawlEngine(spark, newStore(), genPages, Corpus.robots(p), cfg)
+    assert(eGen.warmCorpus() == p.totalPages, "generated corpus passes the size check")
+    eGen.seed(seeds)
+    eGen.runDrain()
+    val eMem = mkEngine(Corpus.allPages(p), Corpus.robots(p), cfg)
+    eMem.seed(seeds)
+    eMem.runDrain()
+    assert(engineClaims(eGen) == engineClaims(eMem), "claim logs")
+    assert(engineState(eGen) == engineState(eMem), "frontier state")
   }
 
   test("lineage: per-partition metrics recorded every batch") {

@@ -61,4 +61,17 @@ class AggExpressionsSpec extends AnyFunSuite {
       .orderBy("k").collect()
     assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq)
   }
+
+  test("serialize returns a fresh array: a later call leaves it intact") {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.LongType
+    // (long, long) pairs are fixed-width, so each row fills the
+    // projection's buffer exactly
+    val agg = ObjArgExtremum(BoundReference(0, LongType, nullable = true),
+      BoundReference(1, LongType, nullable = true), max = false)
+    val first = agg.serialize(new ArgExtremumBuf(1L, 10L))
+    agg.serialize(new ArgExtremumBuf(2L, 20L))
+    val back = agg.deserialize(first)
+    assert((back.ord, back.value) == ((1L, 10L)))
+  }
 }
